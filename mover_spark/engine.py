@@ -11,8 +11,11 @@ describe: catalog printout (etl/engine.go:89-96)
 
 from __future__ import annotations
 
+import functools
 import os
+from concurrent.futures import ThreadPoolExecutor
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -22,6 +25,28 @@ from .operators.closure import extract_closure
 from .operators.sanitize import sanitize_df
 from .sources import jsonio
 from .util import get_query_table
+
+
+def _run_concurrently(spark: SparkSession, actions: list) -> None:
+    """Run independent per-table actions as concurrent Spark jobs.
+
+    Each action is one table's write: a handful of tiny jobs whose cost is
+    fixed per table, not per row, so running them side by side is what
+    fills the executor slots. The pool has one thread per table up to
+    ``defaultParallelism``. Every task inherits the caller's local
+    properties and job tags (a bare thread would drop them). All tasks are
+    waited for before the first error is raised, so every table's cleanup
+    (bulk_upsert's trigger re-enable) has run by then."""
+    if not actions:
+        return
+    wrap = inheritable_thread_target(spark)
+    threads = min(len(actions), spark.sparkContext.defaultParallelism)
+    with ThreadPoolExecutor(max_workers=threads) as pool:
+        futures = [pool.submit(wrap(action)) for action in actions]
+    for fut in futures:
+        err = fut.exception()
+        if err is not None:
+            raise err
 
 
 class Engine:
@@ -71,10 +96,15 @@ class Engine:
             clean = sanitize_df(df, rules, pks, locale=self.config.locale,
                                 dedup=self.catalog.table(tname).pk_unique)
             results[tname] = clean
-            jsonio.write_envelope(clean, tname, out_dir, partitioned=partitioned)
             udf = self._media_urls_df(clean, rules)
             if udf is not None:
                 media_dfs.append(udf)
+        # plans above, writes here: every table's envelope at once
+        _run_concurrently(self.spark, [
+            functools.partial(jsonio.write_envelope, clean, tname, out_dir,
+                              partitioned=partitioned)
+            for tname, clean in results.items()
+        ])
         if media_dfs:
             urls = media_dfs[0]
             for extra in media_dfs[1:]:
@@ -256,11 +286,16 @@ class Engine:
         ignored) or "update" (last-write-wins merge, a refresh capability
         the reference lacks: DO UPDATE on the DB path, existing-row
         replacement on the file path).
-        Load order is alphabetical like the reference's directory walk —
-        survivable because constraints are not enforced during the write (the
-        reference disables triggers for the same reason)."""
+        Tables are prepared one at a time (coercion, key resolution, dedupe
+        are plans only), then every table writes at once as concurrent Spark
+        jobs — on the DB path each with its own connection and its own
+        trigger bracket. Unlike the reference's alphabetical walk, no table
+        waits for its parents: that is safe because each table's FK check
+        triggers are disabled for its own write (the reason the reference
+        disables them too)."""
         payloads = jsonio.read_envelopes(self.spark, in_dir)
         out: dict[str, DataFrame] = {}
+        writes: list[tuple] = []
         live_tables: dict | None = None
         for tname in sorted(payloads):
             df = payloads[tname]
@@ -272,8 +307,8 @@ class Engine:
                 # The reference dispatches purely on the embedded table_name
                 # and takes key metadata from the TARGET database. Do the
                 # same for a DSN target: introspect the live catalog once
-                # (lazily) and use its PK — the envelope's own column order
-                # is meaningless (JSON readback is alphabetical). Only when
+                # (lazily) and use its PK — the envelope's column order
+                # carries no key metadata. Only when
                 # the table is unknown on BOTH sides (or introspection is
                 # unavailable) fall back to the first column as the key.
                 pks, pk_unique = None, True
@@ -304,6 +339,9 @@ class Engine:
             if pk_unique:
                 df = df.dropDuplicates(pks)
             out[tname] = df
+            writes.append((tname, df, pks, pk_unique))
+
+        def write(tname: str, df: DataFrame, pks: list[str], pk_unique: bool) -> None:
             if dsn is not None:
                 from .sources.jdbc import bulk_upsert
 
@@ -312,21 +350,26 @@ class Engine:
                             partition_writer=partition_writer,
                             on_conflict=on_conflict,
                             pk_unique=pk_unique)
-            elif target_dir is not None:
-                dest = os.path.join(target_dir, f"{tname}.parquet")
-                if not os.path.exists(dest):
-                    df.write.parquet(dest)
-                elif on_conflict == "update":
-                    # last-write-wins merge: incoming rows replace same-PK
-                    # existing rows. localCheckpoint materializes the merge
-                    # off the source files so overwriting the path we read
-                    # from is safe.
-                    existing = self.spark.read.parquet(dest)
-                    kept = existing.join(df.select(*pks), on=pks, how="left_anti")
-                    merged = kept.select(*df.columns).unionByName(df).localCheckpoint()
-                    merged.write.mode("overwrite").parquet(dest)
-                else:
-                    existing = self.spark.read.parquet(dest)
-                    fresh = df.join(existing, on=pks, how="left_anti")
-                    fresh.write.mode("append").parquet(dest)
+                return
+            dest = os.path.join(target_dir, f"{tname}.parquet")
+            if not os.path.exists(dest):
+                df.write.parquet(dest)
+            elif on_conflict == "update":
+                # last-write-wins merge: incoming rows replace same-PK
+                # existing rows. localCheckpoint materializes the merge
+                # off the source files so overwriting the path we read
+                # from is safe.
+                existing = self.spark.read.parquet(dest)
+                kept = existing.join(df.select(*pks), on=pks, how="left_anti")
+                merged = kept.select(*df.columns).unionByName(df).localCheckpoint()
+                merged.write.mode("overwrite").parquet(dest)
+            else:
+                existing = self.spark.read.parquet(dest)
+                fresh = df.join(existing, on=pks, how="left_anti")
+                fresh.write.mode("append").parquet(dest)
+
+        if dsn is not None or target_dir is not None:
+            _run_concurrently(
+                self.spark, [functools.partial(write, *w) for w in writes]
+            )
         return out

@@ -46,12 +46,34 @@ def tune(spark: SparkSession) -> SparkSession:
     return spark
 
 
+def host_cpus() -> int:
+    """CPUs this process may run on — the default ``local[N]`` width when
+    ``SPARK_GRAFT_CPUS`` is unset."""
+    try:
+        return len(os.sched_getaffinity(0))
+    except AttributeError:  # not Linux
+        return os.cpu_count() or 1
+
+
+def default_driver_memory() -> str:
+    """Driver heap when ``SPARK_DRIVER_MEMORY`` is unset: half the host's
+    physical memory (the rest is Python workers, off-heap and the OS),
+    at least 1 GB and at most 16 GB."""
+    try:
+        phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (ValueError, OSError, AttributeError):
+        return "16g"
+    mb = phys // 2 // (1024 * 1024)
+    return f"{min(max(mb, 1024), 16 * 1024)}m"
+
+
 def get_spark(app_name: str = "mover-spark", cpus: str | None = None) -> SparkSession:
-    cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS") or str(host_cpus())
+    memory = os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory()
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .config("spark.driver.memory", memory)
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.files.maxPartitionBytes", "128MB")

@@ -6,11 +6,17 @@ per-row ``INSERT ... ON CONFLICT (pk) DO NOTHING``, then sequence resync
 writer has no ON CONFLICT, so the sink is a ``foreachPartition`` batched
 upsert through a DB-API connection — one transaction per partition
 (isolation divergence from the reference's single global tx: documented,
-inherent to distributed writers). The driver is resolved per-process:
-psycopg2 when installed, else the bundled pure-Python wire client
-(minipg.py). The full extract→load→resync round trip is exercised against
-a LIVE local PostgreSQL server in tests/test_postgres_live.py; statement
-sequencing is additionally unit-tested with stub connections.
+inherent to distributed writers). ``Engine.load`` runs every table's
+``bulk_upsert`` at once, as concurrent Spark jobs, each with its own driver
+connection and its own trigger bracket; unlike the reference's
+one-table-at-a-time walk, a child table may land before its parent. That
+is safe because each table's FK check triggers are disabled for its own
+write. The DB-API driver is resolved per-process: psycopg2 when installed,
+else the bundled pure-Python wire client (minipg.py; the Spark driver
+warns once when it falls back). The full extract→load→resync round trip
+is exercised against a LIVE local PostgreSQL server in
+tests/test_postgres_live.py; statement sequencing is additionally
+unit-tested with stub connections.
 
 Catalog introspection uses information_schema/pg_catalog queries equivalent
 to postgres.go:100-403, fetched through ONE spark.read.jdbc round per query
@@ -331,31 +337,39 @@ def _resolve_driver():
     otherwise the bundled pure-Python wire client (minipg: simple-query
     protocol, trust/password auth — enough for the loopback test harness
     and simple deployments). Resolved lazily so executors pick whichever
-    is importable on THEIR python path."""
+    is importable on THEIR python path. Quiet: the driver-side entry
+    points call ``_warn_if_fallback`` once instead of every partition
+    writer warning in every Python worker."""
     try:  # pragma: no cover - psycopg2 absent in this environment
         import psycopg2
         from psycopg2.extras import execute_values
 
         return psycopg2.connect, execute_values
     except ImportError:
-        import warnings
-
         from . import minipg
 
-        # loud, once per process: this is a deliberate downgrade. minipg
-        # binds parameters through the extended-query protocol, but has
-        # no SCRAM, no SSL, and no COPY — fine for the loopback test
-        # harness, NOT a production transport. A deployment that meant to
-        # use psycopg2 should see this immediately instead of a cryptic
-        # executor-side auth error.
+        return minipg.connect, minipg.execute_values
+
+
+def _warn_if_fallback() -> None:
+    """Loud on the driver: the minipg fallback is a deliberate downgrade.
+    minipg binds parameters through the extended-query protocol, but has
+    no SCRAM, no SSL, and no COPY — fine for the loopback test harness,
+    NOT a production transport. A deployment that meant to use psycopg2
+    should see this immediately instead of a cryptic executor-side auth
+    error. Python's default warning filter shows it once per process."""
+    from . import minipg
+
+    if _resolve_driver()[0] is minipg.connect:
+        import warnings
+
         warnings.warn(
             "psycopg2 not importable — falling back to the bundled minipg "
             "wire client (trust/password auth only, no SSL/SCRAM/COPY). "
             "Install psycopg2 on the executors for production loads.",
             RuntimeWarning,
-            stacklevel=2,
+            stacklevel=3,
         )
-        return minipg.connect, minipg.execute_values
 
 
 def _default_connect(dsn: str):
@@ -403,6 +417,8 @@ def bulk_upsert(
     stub to assert the exact statement sequence (no DB in this environment).
     `partition_writer` is injectable for the same reason."""
     pks = _pk_list(pk)
+    if connection_factory is None or partition_writer is None:
+        _warn_if_fallback()
     connect = connection_factory or _default_connect
     make_writer = partition_writer or (
         lambda d, t, cols, key: upsert_partition_writer(

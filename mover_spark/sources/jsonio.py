@@ -11,18 +11,28 @@ Scale mode: a single JSON file means a single writer; for big tables
 ``write_envelope(..., partitioned=True)`` emits a Spark JSON directory
 (``<out>/<table>/part-*.json`` + ``_envelope.json`` manifest) written in
 parallel by every executor. ``read_envelopes`` consumes both layouts.
+
+The partitioned directory also carries ``_schema.json``: the writer's
+Spark schema (``StructType.json()``). ``read_envelopes`` reads the part
+files with that schema in FAILFAST mode, so a load runs no schema-inference
+job and gets the written types back (timestamps, dates, decimals, columns
+that are NULL in every row); a part file that contradicts its sidecar
+raises instead of loading NULLs. A directory without the sidecar (written
+before it existed) is read with schema inference. The manifest
+``_envelope.json`` holds only ``{"table_name", "count"}``.
 """
 
 from __future__ import annotations
 
-import glob
 import json
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 ENVELOPE_MANIFEST = "_envelope.json"
+SCHEMA_SIDECAR = "_schema.json"
 
 
 def _json_safe(v):
@@ -62,15 +72,16 @@ def write_envelope(
     os.makedirs(out_dir, exist_ok=True)
     if partitioned:
         path = os.path.join(out_dir, table_name)
-        df.write.mode("overwrite").json(path)
         # count what was WRITTEN, not a recompute of df's plan — for a
         # non-deterministic upstream (e.g. dropDuplicates) a second run of
-        # the plan could disagree with the files on disk
-        parts = glob.glob(os.path.join(path, "part-*"))
-        # Spark's JSON writer emits one record per line (JSON Lines), so a
-        # line count IS the row count — no need to re-parse every field of
-        # the extract against the schema just to count it
-        n = df.sparkSession.read.text(parts).count() if parts else 0
+        # the plan could disagree with the files on disk. The observation
+        # rides on the write's own execution: no second job, no re-read.
+        written = Observation()
+        observed = df.observe(written, F.count(F.lit(1)).alias("n"))
+        observed.write.mode("overwrite").json(path)
+        n = written.get["n"]
+        with open(os.path.join(path, SCHEMA_SIDECAR), "w") as f:
+            f.write(df.schema.json())
         with open(os.path.join(path, ENVELOPE_MANIFEST), "w") as f:
             json.dump({"table_name": table_name, "count": n}, f, indent="\t")
         return path
@@ -105,8 +116,15 @@ def read_envelopes(spark: SparkSession, path: str) -> dict[str, DataFrame]:
         elif os.path.isdir(full) and os.path.exists(os.path.join(full, ENVELOPE_MANIFEST)):
             with open(os.path.join(full, ENVELOPE_MANIFEST)) as f:
                 manifest = json.load(f)
-            df = spark.read.json(os.path.join(full, "part-*"))
-            out[manifest["table_name"]] = df
+            # filter, not a `part-*` glob path: a glob makes Spark probe
+            # for a streaming-sink log and log a stack trace per table
+            reader = spark.read.option("pathGlobFilter", "part-*")
+            sidecar = os.path.join(full, SCHEMA_SIDECAR)
+            if os.path.exists(sidecar):
+                with open(sidecar) as f:
+                    schema = StructType.fromJson(json.load(f))
+                reader = reader.schema(schema).option("mode", "FAILFAST")
+            out[manifest["table_name"]] = reader.json(full)
     return out
 
 

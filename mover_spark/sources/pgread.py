@@ -51,7 +51,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from .jdbc import _default_connect
+from .jdbc import _default_connect, _warn_if_fallback
 
 #: PG type OID -> Spark type (psycopg2 and minipg both expose the OID as
 #: cursor.description[i][1]); unmapped OIDs degrade to string — the same
@@ -213,6 +213,8 @@ def parallel_read(
     contrast with the reference's extractor (extractor.go:158)."""
     import pandas as pd
 
+    if connection_factory is None:
+        _warn_if_fallback()
     schema = describe_query(dsn, query, columns, connection_factory)
     names = [f.name for f in schema.fields]
     collist = ", ".join(_qident(c) for c in names)

@@ -508,6 +508,130 @@ def test_write_envelope_partitioned_empty_table(spark, catalog, tmp_path):
     assert manifest == {"table_name": "region", "count": 0}
 
 
+def test_envelope_schema_sidecar(spark, tmp_path):
+    """The partitioned writer's _schema.json sidecar reads back the written
+    types with no inference; a pre-sidecar directory still loads through
+    inference + coercion to the same values; a part file contradicting its
+    sidecar raises instead of loading NULLs."""
+    import datetime
+    from decimal import Decimal
+
+    import pytest
+    from pyspark.sql.types import (
+        DateType,
+        DecimalType,
+        LongType,
+        StringType,
+        StructField,
+        StructType,
+        TimestampType,
+    )
+
+    schema = StructType([
+        StructField("id", LongType()),
+        StructField("ts", TimestampType()),
+        StructField("d", DateType()),
+        StructField("amt", DecimalType(10, 2)),
+        StructField("note", StringType()),
+        StructField("gone", StringType()),  # NULL in every row
+    ])
+    df = spark.createDataFrame([
+        (1, datetime.datetime(2024, 1, 2, 3, 4, 5, 678000),
+         datetime.date(2024, 1, 2), Decimal("123.45"), "a", None),
+        (2, None, None, None, None, None),
+    ], schema)
+    env = str(tmp_path / "env")
+    path = jsonio.write_envelope(df, "typed", env, partitioned=True)
+    sidecar = os.path.join(path, jsonio.SCHEMA_SIDECAR)
+    assert os.path.exists(sidecar)
+    want = df.orderBy("id").collect()
+
+    typed = jsonio.read_envelopes(spark, env)["typed"]
+    assert typed.schema == df.schema
+    assert typed.orderBy("id").collect() == want
+
+    os.remove(sidecar)  # a directory written before the sidecar existed
+    legacy = jsonio.read_envelopes(spark, env)["typed"]
+    assert jsonio.coerce_to_schema(legacy, df).orderBy("id").collect() == want
+
+    with open(sidecar, "w") as f:
+        f.write(df.schema.json())
+    with open(os.path.join(path, "part-99999-bad.json"), "w") as f:
+        f.write('{"id": "not-a-number", "note": "x"}\n')
+    with pytest.raises(Exception):
+        jsonio.read_envelopes(spark, env)["typed"].collect()
+
+
+def test_load_failure_in_one_table_reenables_every_tables_triggers(
+    spark, catalog, tmp_path
+):
+    """Tables load concurrently: when one table's distributed write fails,
+    every table's trigger bracket still closes, the tables that succeeded
+    still resync their sequences, and the error reaches the caller."""
+    import pytest
+
+    tables = ["nation", "region", "supplier"]
+    for t in tables:
+        jsonio.write_envelope(catalog.df(t), t, str(tmp_path), partitioned=True)
+
+    log, conns = [], []
+
+    def connect(dsn):
+        conns.append(_StubConn(log))
+        return conns[-1]
+
+    def failing_writer(dsn, table, columns, pk):
+        def write(rows):
+            if table == "region":
+                raise ValueError("boom in region")
+            for _ in rows:
+                pass
+        return write
+
+    eng = Engine(spark, catalog, MoverConfig())
+    with pytest.raises(Exception, match="boom in region"):
+        eng.load(str(tmp_path), dsn="dsn://stub", connection_factory=connect,
+                 partition_writer=failing_writer)
+    for t in tables:
+        assert f'ALTER TABLE "{t}" DISABLE TRIGGER ALL' in log
+        assert f'ALTER TABLE "{t}" ENABLE TRIGGER ALL' in log
+    resynced = {t for t in tables if any(f'"{t}"' in s and "setval" in s for s in log)}
+    assert resynced == {"nation", "supplier"}
+    assert conns and all(c.closed for c in conns)
+
+
+def test_concurrent_table_jobs_carry_caller_job_tag(spark, catalog, tmp_path):
+    """The per-table writes run on pool threads; every Spark job that
+    extract and load start must still carry the caller's job tag."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    tag = "engine-concurrency-tag"
+
+    def noop_writer(dsn, table, columns, pk):
+        def write(rows):
+            for _ in rows:
+                pass
+        return write
+
+    before = set(tracker.getJobIdsForGroup())
+    sc.addJobTag(tag)
+    try:
+        eng = Engine(spark, catalog, MoverConfig())
+        out = str(tmp_path / "env")
+        results = eng.extract(out, "SELECT * FROM customer WHERE c_custkey <= 3")
+        loaded = eng.load(out, dsn="dsn://stub",
+                          connection_factory=lambda dsn: _StubConn([]),
+                          partition_writer=noop_writer)
+    finally:
+        sc.removeJobTag(tag)
+    assert set(loaded) == set(results) and len(results) >= 3
+    started = set(tracker.getJobIdsForGroup()) - before
+    tagged = set(sc._jsc.sc().statusTracker().getJobIdsForTag(tag))
+    # at least one envelope write and one upsert job per table
+    assert len(started) >= 2 * len(results)
+    assert started <= tagged, f"untagged jobs: {sorted(started - tagged)}"
+
+
 def test_extract_default_is_partitioned_no_collect(spark, catalog, tmp_path, monkeypatch):
     """VERDICT r2: the DEFAULT extract path must be scale-safe — partitioned
     envelopes written executor-parallel, with NO driver-side collect()
